@@ -185,6 +185,37 @@ object Core {
        |  ${sqlR4("total_quantity / nullif(CAST(line_count AS DOUBLE), 0.0)")} AS items_per_line
        |FROM a ORDER BY ship_date""".stripMargin
 
+  /** The longest `globalCounts` waits for its ten table counts. */
+  private val GlobalCountsTimeout = scala.concurrent.duration.Duration(10, "minutes")
+
+  /** Runs the named counts concurrently from a 4-thread driver pool and
+    * waits at most `timeout` for all of them. Each count's Spark jobs
+    * carry one job tag, so on timeout the counts still running are
+    * cancelled (they would otherwise keep using the shared SparkContext)
+    * and a `TimeoutException` names them.
+    */
+  private[graft] def countAll(spark: SparkSession, counts: Seq[(String, () => Long)],
+                              timeout: scala.concurrent.duration.FiniteDuration): Seq[(String, Long)] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val sc = spark.sparkContext
+    val tag = s"graft-counts-${java.util.UUID.randomUUID()}"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val futures = counts.map { case (n, c) =>
+        n -> Future { sc.addJobTag(tag); try c() finally sc.removeJobTag(tag) }
+      }
+      try Await.result(Future.sequence(futures.map { case (n, f) => f.map(n -> _) }), timeout)
+      catch {
+        case _: java.util.concurrent.TimeoutException =>
+          sc.cancelJobsWithTag(tag)
+          val pending = futures.collect { case (n, f) if !f.isCompleted => n }
+          throw new java.util.concurrent.TimeoutException(
+            s"still pending after $timeout: ${pending.mkString(", ")}")
+      }
+    } finally pool.shutdownNow()
+  }
+
   /** A4 — global counts (generate-asset.scala:338,360) over every table.
     *
     * r16: the ten per-table counts are INDEPENDENT single-row jobs, so
@@ -195,19 +226,17 @@ object Core {
     * parquet inputs — nothing is memoized or cached; the result enters
     * the plan as a local relation, same as the ANN driver-LUT class.
     * Same rows, names, types as the union-of-aggregates form.
+    *
+    * Eager: the counts run when the query function is CALLED, not when
+    * its result is executed, and the call waits at most
+    * `GlobalCountsTimeout`, then cancels the counts still running and
+    * fails naming their tables.
     */
   val globalCounts: Q = (spark, dir) => {
     val names = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val counts = try {
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      Await.result(
-        Future.sequence(names.map(n => Future(n -> table(spark, dir, n).count()))),
-        Duration.Inf)
-    } finally pool.shutdown()
+    val counts = countAll(spark,
+      names.map(n => n -> (() => table(spark, dir, n).count())), GlobalCountsTimeout)
     import spark.implicits._
     counts.toDF("table_name", "row_count")
       .select(col("table_name"), col("row_count"))

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.Tables
 
 /** Deduplication operators over `documents` — the core corpus-cleaning
@@ -589,7 +590,10 @@ object Dedup {
     * travels per round. Convergence is O(log diameter) rounds instead of
     * O(diameter) — on a 100 TB graph with a long-chain component that is
     * the difference between ~40 shuffles and ~7 (DedupGroupsSpec proves
-    * the bound on a planted chain and at 10⁵-edge volume). Returns
+    * the bound at 10⁵-edge volume). That bound holds for the chain, not
+    * every graph: on sparse graphs with random ids the rounds grow with
+    * the diameter (a simulation of this round rule needs 27-32 rounds on
+    * 60k ids and 40k random edges, over `maxRounds`). Returns
     * (labels, rounds).
     *
     * Lifecycle (r3 defect fix): round N-1's checkpoint blocks are freed
@@ -599,44 +603,88 @@ object Dedup {
     * the session (measured in r3: every bench query sorting after
     * q_dedup_* degraded up to 5× from exactly this pressure).
     *
-    * Shuffle sizing: the per-round label table is |V| rows — tiny on a
-    * near-dup pair graph even when the corpus is huge — so the rounds run
-    * at min(parallelism, |E|/64k+1) shuffle partitions instead of
-    * inheriting the session's (32-partition rounds on a 500-row table are
-    * pure scheduler overhead × ~rounds × 3 jobs). At volume the formula
-    * saturates to the session's parallelism.
+    * Sizing: below `MaxLocalEdges` = 2^20 staged edges (symmetrized,
+    * self-looped, distinct), which covers every near-dup pair graph of
+    * the harness corpora, the whole computation runs as ONE union-find
+    * in a single `mapPartitions` task (`unionFind`) and reports
+    * rounds = 1. It is exact: the union links the larger root under the
+    * smaller one, so every root is the minimum id of its component,
+    * which is the unique fixpoint of min-label propagation — the same
+    * labels, bit for bit. The limit is a memory bound, not a speed
+    * crossover. The task holds a LongMap entry per vertex (at most one
+    * per staged edge; 50-65 bytes each, measured from 10^6 to 10^7
+    * entries), so 2^20 edges cap it at about 70 MB, inside one task's
+    * share of the user memory of a default 1 GB, 4-core executor
+    * (~290 MB / 4); Spark neither tracks nor spills it. On time the
+    * union-find won at every size measured on a 4-core local[4] host,
+    * 10^5 to 10^7 staged edges, whole call: 3.8x faster at 10^6
+    * disjoint pairs (1.8 s vs 6.8 s; the rounds' best case, 2 rounds),
+    * 20x with a 37k-vertex chain in the graph (1.6 s vs 33 s), and
+    * still 3x at 10^7 pairs (17-19 s vs 52-62 s, but ~330 MB of map).
+    * From 2^20 edges up, the pointer-jumping rounds run in a
+    * cloned session whose shuffle width is min(parallelism, |E|/64k+1),
+    * never the session's own; their joins and aggregates run in Spark's
+    * managed execution memory, which spills.
+    *
+    * Ids: src and dst must be non-null bigint, which every caller
+    * passes. Any other type, or a null endpoint, raises
+    * `EdgeIdException` before any labelling runs (a join-based round
+    * would silently drop a null-keyed edge).
     */
   def connectedComponents(edges: DataFrame): (DataFrame, Int) =
-    withRightSizedShuffle(edges) { (_, sym) =>
-      ccLoop(sym,
-        stageLabels = (df, _) => df.localCheckpoint(),
-        stageTemp = df => df.localCheckpoint(),
-        releaseLabels = freeLocalCheckpoint,
-        releaseTemp = freeLocalCheckpoint)
-    }
+    connectedComponents(edges, MaxLocalEdges)
+
+  /** `connectedComponents` with the union-find's edge limit given, so a
+    * spec can run the pointer-jumping rounds on a small graph (limit 0).
+    */
+  private[graft] def connectedComponents(edges: DataFrame, maxLocalEdges: Long): (DataFrame, Int) =
+    withRightSizedShuffle(edges, None, maxLocalEdges, Staging(
+      labels = (df, _) => df.localCheckpoint(),
+      temp = _.localCheckpoint(),
+      releaseLabels = freeLocalCheckpoint,
+      releaseTemp = freeLocalCheckpoint))
 
   /** Durable-checkpoint variant — the shape a real 1000-executor run
-    * needs: the symmetrized edge list AND per-round labels checkpoint to
+    * needs: the symmetrized edge list AND the labels checkpoint to
     * PARQUET (labels on two alternating paths under `checkpointDir`), so
     * a lost executor replays every fixpoint input from storage instead of
     * failing the job the way executor-local checkpoint blocks (or a
     * cached edge list with lineage into the upstream near-dup pipeline)
     * would. Intra-round temps stay cached WITH lineage — recomputable
-    * from the parquet-backed edges + labels alone. Same fixpoint, same
-    * labels — DedupGroupsSpec asserts agreement with the local variant.
+    * from the parquet-backed edges + labels alone. Same labels —
+    * DedupGroupsSpec asserts agreement with the local variant.
     */
   def connectedComponentsDurable(edges: DataFrame, checkpointDir: String): (DataFrame, Int) =
-    withRightSizedShuffle(edges, edgeDir = Some(checkpointDir)) { (fx, sym) =>
-      ccLoop(sym,
-        stageLabels = (df, round) => {
-          val path = s"$checkpointDir/labels_${round % 2}"
-          df.write.mode("overwrite").parquet(path)
-          fx.read.parquet(path)
-        },
-        stageTemp = df => df.cache(),
-        releaseLabels = _ => (), // the two paths recycle via overwrite
-        releaseTemp = df => { df.unpersist(blocking = false); () })
-    }
+    connectedComponentsDurable(edges, checkpointDir, MaxLocalEdges)
+
+  /** `connectedComponentsDurable` with the union-find's edge limit given. */
+  private[graft] def connectedComponentsDurable(edges: DataFrame, checkpointDir: String,
+                                                maxLocalEdges: Long): (DataFrame, Int) =
+    withRightSizedShuffle(edges, Some(checkpointDir), maxLocalEdges, Staging(
+      labels = (df, round) => {
+        val path = s"$checkpointDir/labels_${round % 2}"
+        df.write.mode("overwrite").parquet(path)
+        df.sparkSession.read.parquet(path)
+      },
+      temp = _.cache(),
+      releaseLabels = _ => (), // the two paths recycle via overwrite
+      releaseTemp = df => { df.unpersist(blocking = false); () }))
+
+  /** A connected-components edge list whose src or dst is not bigint,
+    * or holds a null.
+    */
+  final class EdgeIdException(msg: String) extends IllegalArgumentException(msg)
+
+  /** How a variant stages its frames. `labels(df, round)` must return a
+    * MATERIALIZED frame with truncated lineage; `temp` stages the
+    * intra-round neighbor-min table read by both sides of the
+    * pointer-jump self-join; the releases free a stage once nothing
+    * reads it.
+    */
+  private final case class Staging(labels: (DataFrame, Int) => DataFrame,
+                                   temp: DataFrame => DataFrame,
+                                   releaseLabels: DataFrame => Unit,
+                                   releaseTemp: DataFrame => Unit)
 
   /** Frees the block-store RDD behind a localCheckpoint'd frame NOW
     * (ContextCleaner would get there only at GC time — too late for a
@@ -650,18 +698,33 @@ object Dedup {
       case _ => ()
     }
 
-  /** Symmetrize + self-loop + dedup the edge list, size the round
-    * shuffles off its cardinality, and run `body` inside a THROWAWAY
-    * CLONED SESSION (`newSession`: own SQL conf, shared SparkContext and
-    * cache manager) whose shuffle width is the edge-sized nPart. The
-    * caller's session conf is never touched (r4 ADVICE: the previous
-    * set/restore mutated the session globally, so concurrent unrelated
-    * queries planned at the narrowed width). The fixpoint result is
-    * rebased into the caller's session before returning, so downstream
-    * plans built on the labels use the CALLER's conf, not the fixpoint's.
+  /** Staged edges per shuffle partition of the pointer-jumping rounds. */
+  private val EdgesPerPartition = 65536L
+
+  /** Staged edges below which the one-task union-find labels the graph:
+    * a memory bound (see `connectedComponents`, "Sizing").
     */
-  private def withRightSizedShuffle(edges: DataFrame, edgeDir: Option[String] = None)
-      (body: (SparkSession, DataFrame) => (DataFrame, Int)): (DataFrame, Int) = {
+  private val MaxLocalEdges = 1L << 20
+
+  /** Symmetrize + self-loop + dedup the edge list, stage it, and label
+    * it: one union-find task below `maxLocalEdges` staged edges, else the
+    * pointer-jumping rounds inside a THROWAWAY CLONED SESSION
+    * (`newSession`: own SQL conf, shared SparkContext and cache manager)
+    * whose shuffle width is the edge-sized partition count. The caller's
+    * session conf is never touched (setting and restoring it would let
+    * concurrent unrelated queries plan at the narrowed width). The
+    * fixpoint result is rebased into the caller's session before
+    * returning, so downstream plans built on the labels use the CALLER's
+    * conf, not the fixpoint's.
+    */
+  private def withRightSizedShuffle(edges: DataFrame, edgeDir: Option[String],
+                                    maxLocalEdges: Long, st: Staging): (DataFrame, Int) = {
+    for (c <- Seq("src", "dst")) {
+      val t = edges.schema(c).dataType
+      if (t != LongType)
+        throw new EdgeIdException(
+          s"connected components: edge column $c is ${t.simpleString}, expected bigint")
+    }
     val parent = edges.sparkSession
     val sym0 = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -671,63 +734,98 @@ object Dedup {
     // ids, and a second plan branch would double the per-round work).
     val symRaw0 = sym0.union(sym0.select(col("src").as("src"), col("src").as("dst")))
       .distinct()
-    val fx = parent.newSession()
-    // Edge staging, rebased into the fixpoint session: a parquet write
-    // for the durable variant (no lineage into the upstream pipeline), a
-    // cached row RDD for the local one (RDD caching is context-level, so
-    // the ~rounds re-reads hit the cache regardless of session).
-    val (symRaw, releaseEdges): (DataFrame, () => Unit) = edgeDir match {
+    // Edge staging, readable from any session: a parquet write for the
+    // durable variant (no lineage into the upstream pipeline), a cached
+    // row RDD for the local one (RDD caching is context-level, so the
+    // ~rounds re-reads hit the cache regardless of session).
+    val (stagedIn, releaseEdges): (SparkSession => DataFrame, () => Unit) = edgeDir match {
       case Some(d) =>
         val path = s"$d/edges"
         symRaw0.write.mode("overwrite").parquet(path)
-        (fx.read.parquet(path), () => ())
+        (_.read.parquet(path), () => ())
       case None =>
         val rdd = symRaw0.rdd
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (fx.createDataFrame(rdd, symRaw0.schema),
+        (_.createDataFrame(rdd, symRaw0.schema),
           () => { rdd.unpersist(blocking = false); () })
     }
     try {
-      val nEdges = symRaw.count() // materializes the staged edges
-      val nPart = math.max(1, math.min(parent.sparkContext.defaultParallelism,
-        (nEdges / 65536L + 1L).toInt))
-      fx.conf.set("spark.sql.shuffle.partitions", nPart.toString)
-      // coalesce (no shuffle) so the per-round join reads nPart staged
-      // splits, not 32 near-empty ones.
-      val (labels, rounds) = body(fx, symRaw.coalesce(nPart))
-      // Rebase into the caller's session — no lineage back into the
-      // fixpoint rounds either way. Local path: `.rdd` is the final
-      // localCheckpoint RDD, a materialized block-store handle (freed by
-      // Det.unpersistDeep when the owning memo is released). Durable
-      // path: `ccLoop` returned fx.read.parquet(...), so `.rdd` stays a
-      // LAZY scan — checkpointDir/labels_{rounds%2} must outlive the
-      // returned frame's last consumer.
-      (parent.createDataFrame(labels.rdd, labels.schema), rounds)
+      val symRaw = stagedIn(parent)
+      // One job materializes the staged edges, counts them and finds
+      // null endpoints (every null-bearing edge has a null src once
+      // symmetrized and self-looped).
+      val counts = symRaw.agg(count(lit(1)), count_if(col("src").isNull)).head()
+      val (nEdges, nNull) = (counts.getLong(0), counts.getLong(1))
+      if (nNull > 0)
+        throw new EdgeIdException(
+          s"connected components: $nNull staged edges have a null endpoint")
+      if (nEdges < maxLocalEdges)
+        (st.labels(unionFind(symRaw.coalesce(1)), 1), 1)
+      else {
+        val nPart = math.max(1, math.min(parent.sparkContext.defaultParallelism,
+          (nEdges / EdgesPerPartition + 1L).toInt))
+        val fx = parent.newSession()
+        fx.conf.set("spark.sql.shuffle.partitions", nPart.toString)
+        // coalesce (no shuffle) so the per-round join reads nPart staged
+        // splits, not 32 near-empty ones.
+        val (labels, rounds) = ccLoop(stagedIn(fx).coalesce(nPart), st)
+        // Rebase into the caller's session — no lineage back into the
+        // fixpoint rounds either way. Local path: `.rdd` is the final
+        // localCheckpoint RDD, a materialized block-store handle (freed by
+        // Det.unpersistDeep when the owning memo is released). Durable
+        // path: `ccLoop` returned fx.read.parquet(...), so `.rdd` stays a
+        // LAZY scan — checkpointDir/labels_{rounds%2} must outlive the
+        // returned frame's last consumer.
+        (parent.createDataFrame(labels.rdd, labels.schema), rounds)
+      }
     } finally releaseEdges()
   }
 
-  /** The fixpoint itself, parameterized by checkpoint strategy.
-    * `stageLabels(df, round)` must return a MATERIALIZED frame with
-    * truncated lineage; `stageTemp` stages the intra-round neighbor-min
-    * table read by both sides of the pointer-jump self-join.
+  /** Connected components of a staged edge list in ONE task (the caller
+    * coalesces it to one partition): union-find with union by smaller
+    * root and path compression. Linking the larger root under the
+    * smaller keeps every root the minimum id of its set, so `find(v)` is
+    * the min label the fixpoint converges to. The staged list is
+    * symmetrized and self-looped, so every vertex appears; `getLong`
+    * throws on a null endpoint rather than skipping it.
     */
-  private def ccLoop(sym: DataFrame,
-                     stageLabels: (DataFrame, Int) => DataFrame,
-                     stageTemp: DataFrame => DataFrame,
-                     releaseLabels: DataFrame => Unit,
-                     releaseTemp: DataFrame => Unit,
-                     maxRounds: Int = 25): (DataFrame, Int) = {
-    var labels = stageLabels(sym.select(col("src").as("doc")).distinct()
+  private def unionFind(sym: DataFrame): DataFrame = {
+    val rows = sym.rdd.mapPartitions { edges =>
+      val parent = scala.collection.mutable.LongMap.empty[Long]
+      def find(v: Long): Long = {
+        var root = v
+        while (parent(root) != root) root = parent(root)
+        var x = v
+        while (x != root) { val next = parent(x); parent(x) = root; x = next }
+        root
+      }
+      edges.foreach { e =>
+        val (a, b) = (e.getLong(0), e.getLong(1))
+        parent.getOrElseUpdate(a, a)
+        parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+      parent.keys.toArray.iterator.map(v => Row(v, find(v)))
+    }
+    // The fixpoint's schema: doc keeps src's nullability, lbl is a min.
+    sym.sparkSession.createDataFrame(rows, StructType(Seq(
+      sym.schema("src").copy(name = "doc"), StructField("lbl", LongType))))
+  }
+
+  /** The fixpoint itself, parameterized by the variant's staging. */
+  private def ccLoop(sym: DataFrame, st: Staging, maxRounds: Int = 25): (DataFrame, Int) = {
+    var labels = st.labels(sym.select(col("src").as("doc")).distinct()
       .withColumn("lbl", col("doc")), 0)
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxRounds) {
-      val nbrMin = stageTemp(sym.join(labels, sym("dst") === labels("doc"))
+      val nbrMin = st.temp(sym.join(labels, sym("dst") === labels("doc"))
         .groupBy(sym("src").as("doc")).agg(min(col("lbl")).as("lbl")))
       // Pointer jump through the round's OWN labels: l(v) ← min(l(v), l(l(v))).
       // Aliased self-join — bare column refs on a self-joined frame resolve
       // ambiguously.
-      val next = stageLabels(nbrMin.as("a")
+      val next = st.labels(nbrMin.as("a")
         .join(nbrMin.as("b"), col("a.lbl") === col("b.doc"), "left_outer")
         .select(col("a.doc").as("doc"),
           least(col("a.lbl"), coalesce(col("b.lbl"), col("a.lbl"))).as("lbl")),
@@ -736,8 +834,8 @@ object Dedup {
         .join(labels.as("p"), col("n.doc") === col("p.doc"))
         .filter(col("n.lbl") =!= col("p.lbl")).count()
       // Round N-1's artifacts are dead the moment the check above ran.
-      releaseTemp(nbrMin)
-      releaseLabels(labels)
+      st.releaseTemp(nbrMin)
+      st.releaseLabels(labels)
       labels = next
       converged = changed == 0
       rounds += 1

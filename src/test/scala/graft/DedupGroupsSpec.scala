@@ -13,14 +13,21 @@ class DedupGroupsSpec extends SparkSpec {
   test("chain converges in O(log n) rounds with pointer jumping") {
     import spark.implicits._
     // 0-1-2-...-15: diameter 15. Plain propagation needs ~15 rounds;
-    // doubling must finish in ≤ ceil(log2(15)) + 2 = 6.
+    // doubling must finish in ≤ ceil(log2(15)) + 2 = 6. A union-find
+    // limit of 0 runs the rounds on this small graph; by default its 31
+    // staged edges take the one-task union-find.
     val edges = (0L until 15L).map(i => (i, i + 1)).toDF("src", "dst")
-    val (labels, rounds) = Dedup.connectedComponents(edges)
+    val (labels, rounds) = Dedup.connectedComponents(edges, maxLocalEdges = 0L)
     val lbls = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lbls.size == 16 && lbls.values.forall(_ == 0L),
       s"single chain component labeled by its min: $lbls")
     assert(rounds <= 6, s"pointer jumping should need ≤6 rounds for diameter 15, took $rounds")
+    assert(rounds >= 2, s"expected the pointer-jumping rounds, took $rounds round(s)")
     labels.unpersist()
+    val (ufLabels, ufRounds) = Dedup.connectedComponents(edges)
+    assert(ufRounds == 1, s"expected the one-task union-find, took $ufRounds round(s)")
+    assert(ufLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == lbls)
+    ufLabels.unpersist()
   }
 
   test("disjoint components get distinct min labels") {
@@ -50,6 +57,90 @@ class DedupGroupsSpec extends SparkSpec {
     // from parquet, with no lineage into the upstream pair pipeline).
     assert(new java.io.File(s"$dir/labels_${rounds % 2}").exists())
     assert(new java.io.File(s"$dir/edges").exists())
+  }
+
+  /** Component min labels by BFS over an undirected edge list. */
+  private def bfsLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    var labels = Map.empty[Long, Long]
+    for (start <- adj.keys.toSeq.sorted if !labels.contains(start)) {
+      // Ascending starts: the first unlabelled vertex is its component's min.
+      var frontier = List(start)
+      labels += start -> start
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(adj).filterNot(labels.contains).distinct
+        frontier.foreach(v => labels += v -> start)
+      }
+    }
+    labels
+  }
+
+  /** A seeded random graph with duplicate edges, reversed duplicates and
+    * self-loops: `nEdges` random edges over `nVertices` ids (offset so
+    * ids are not dense from 0), plus a copy of every 7th edge, a
+    * reversal of every 5th and a self-loop on every 11th.
+    */
+  private def randomGraph(seed: Long, nVertices: Int, nEdges: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val base = Seq.fill(nEdges)(
+      (1000L + rnd.nextInt(nVertices), 1000L + rnd.nextInt(nVertices)))
+    base ++ base.grouped(7).map(_.head) ++ base.grouped(5).map(_.head.swap) ++
+      base.grouped(11).map { g => (g.head._1, g.head._1) }
+  }
+
+  /** Both variants must label `edges` as BFS does: by the union-find
+    * (default limit) and, if `fixpoint`, by the pointer-jumping rounds
+    * too (limit 0).
+    */
+  private def assertLabelsMatchBfs(edges: Seq[(Long, Long)], fixpoint: Boolean): Unit = {
+    import spark.implicits._
+    val expected = bfsLabels(edges)
+    val df = edges.toDF("src", "dst")
+    val dir = java.nio.file.Files.createTempDirectory("cc_random").toString
+    val paths = Seq("union-find" -> Long.MaxValue) ++
+      (if (fixpoint) Seq("fixpoint" -> 0L) else Nil)
+    for ((path, limit) <- paths;
+         (variant, run) <- Seq[(String, () => (org.apache.spark.sql.DataFrame, Int))](
+           "local" -> (() => Dedup.connectedComponents(df, limit)),
+           "durable" -> (() => Dedup.connectedComponentsDurable(df, dir, limit)))) {
+      val (labels, rounds) = run()
+      val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == expected, s"$variant $path labels differ from BFS on ${got.size} vertices")
+      assert((rounds >= 2) == (path == "fixpoint"), s"$variant $path took $rounds round(s)")
+      labels.unpersist()
+    }
+  }
+
+  test("random graph, ~5k staged edges: union-find labels equal BFS's, both variants") {
+    // ~2.3k edges over 3k ids: a mix of trees, cycles and singletons.
+    // The rounds are not run here: on a graph this sparse they grow with
+    // the diameter (18-26 rounds by simulation, against maxRounds 25)
+    // and the local variant's plan statistics square every round, the
+    // open fixpoint defect recorded in ROADMAP.md.
+    assertLabelsMatchBfs(randomGraph(seed = 11L, nVertices = 3000, nEdges = 1600),
+      fixpoint = false)
+  }
+
+  test("random graph, ~100k staged edges: union-find and fixpoint labels equal BFS's, both variants") {
+    // 40k random edges over 20k vertices (+ duplicates, reversals,
+    // self-loops) stage ~100k edges: two partitions of fixpoint work.
+    // Average degree 4 keeps the diameter short: on random ids the
+    // rounds grow with the diameter, not its log, and a sparser graph
+    // (60k ids, 40k edges) needs more rounds than maxRounds allows.
+    assertLabelsMatchBfs(randomGraph(seed = 12L, nVertices = 20000, nEdges = 40000),
+      fixpoint = true)
+  }
+
+  test("non-bigint or null edge ids fail loudly in both variants") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("cc_bad").toString
+    val ints = Seq((1, 2), (2, 3)).toDF("src", "dst")
+    val nulls = Seq((1L, Some(2L)), (3L, None)).toDF("src", "dst")
+    for (bad <- Seq(ints, nulls)) {
+      intercept[Dedup.EdgeIdException](Dedup.connectedComponents(bad))
+      intercept[Dedup.EdgeIdException](Dedup.connectedComponentsDurable(bad, dir))
+    }
   }
 
   test("df-capped postings prune candidates, never invent pairs") {
@@ -223,6 +314,8 @@ class DedupGroupsSpec extends SparkSpec {
     // shape: a 10k-vertex chain (diameter 10k — the pointer-jumping
     // stress), a 60k-leaf star (one huge shallow component — the skew
     // stress), 15k disjoint pairs (label-table width) ≈ 10^5 edges.
+    // The graph is far under the union-find's limit, so limit 0 makes
+    // both it and the calibration run the pointer-jumping rounds.
     // Machine calibration: the same fixpoint machinery (scheduler,
     // codegen-per-round, checkpoint staging) on a 300-edge chain. The
     // volume budget scales off this instead of a wall-clock constant —
@@ -239,7 +332,8 @@ class DedupGroupsSpec extends SparkSpec {
     def calibrate(): Double = {
       val t = System.nanoTime()
       Dedup.connectedComponents(
-        spark.range(0, 299).selectExpr("id AS src", "id + 1 AS dst"))._1.count()
+        spark.range(0, 299).selectExpr("id AS src", "id + 1 AS dst"), maxLocalEdges = 0L)
+        ._1.count()
       (System.nanoTime() - t) / 1e9
     }
     val calibBefore = calibrate()
@@ -249,10 +343,12 @@ class DedupGroupsSpec extends SparkSpec {
     val pairs = spark.range(0, 15000)
       .selectExpr("id * 2 + 200000 AS src", "id * 2 + 200001 AS dst")
     val t0 = System.nanoTime()
-    val (labels, rounds) = Dedup.connectedComponents(chain.union(star).union(pairs))
+    val edges = chain.union(star).union(pairs)
+    val (labels, rounds) = Dedup.connectedComponents(edges, maxLocalEdges = 0L)
     val byLabel = labels.groupBy("lbl").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val secs = (System.nanoTime() - t0) / 1e9
+    assert(rounds >= 2, s"expected the pointer-jumping fixpoint, took $rounds round(s)")
     // Pointer jumping: ≤ ceil(log2(diameter)) + 2 rounds, not O(diameter).
     assert(rounds <= math.ceil(math.log(10000) / math.log(2)).toInt + 2,
       s"expected O(log d) rounds for diameter 10k, took $rounds")
@@ -267,6 +363,12 @@ class DedupGroupsSpec extends SparkSpec {
       s"volume fixpoint took ${secs}s vs budget ${budget}s " +
         s"(calibration before=${calibBefore}s after=${calibAfter}s) — " +
         "scheduling overhead regression")
+    // By default the same graph takes the one-task union-find: same labels.
+    val (ufLabels, ufRounds) = Dedup.connectedComponents(edges)
+    assert(ufRounds == 1, s"expected the one-task union-find, took $ufRounds round(s)")
+    assert(ufLabels.count() == labels.count() && ufLabels.exceptAll(labels).isEmpty,
+      "union-find labels differ from the fixpoint's at volume")
+    ufLabels.unpersist()
     labels.unpersist()
   }
 }

@@ -95,4 +95,27 @@ class OperatorSpec extends SparkSpec {
       .select("cosine").collect().map(_.getDouble(0)).toSeq
     assert(rows == rows.sorted.reverse)
   }
+
+  test("a bounded count wait cancels and names only the counts still pending") {
+    import scala.concurrent.duration._
+    // A count whose one task spins until Spark kills it (capped at 60s).
+    val stuck = () => spark.range(0, 1, 1, 1).map { i =>
+      val t0 = System.nanoTime()
+      while (!org.apache.spark.TaskContext.get().isInterrupted() &&
+        System.nanoTime() - t0 < 60e9) Thread.sleep(20)
+      i
+    }.count()
+    val err = intercept[java.util.concurrent.TimeoutException](
+      graft.queries.Core.countAll(spark, Seq("region" -> (() => 5L), "lineitem" -> stuck),
+        2.seconds))
+    assert(err.getMessage.endsWith(": lineitem"), err.getMessage)
+    // The abandoned count's job is cancelled, not left running.
+    val deadline = System.nanoTime() + 10e9
+    while (spark.sparkContext.statusTracker.getActiveJobIds().nonEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(50)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "the timed-out count's job is still running")
+    assert(graft.queries.Core.countAll(spark, Seq("region" -> (() => 5L)), 1.second) ==
+      Seq("region" -> 5L))
+  }
 }
