@@ -44,7 +44,9 @@ import org.apache.spark.sql.SparkSession
   *     checkpoint RDDs starved every query sorting after them, up to 5×):
   *     pins are released at each FAMILY boundary (q_dedup_* → q_embed_*)
   *     by default, so no query pays for a prior family's residue and
-  *     per-query numbers are attributable. SPARK_GRAFT_BENCH_ISOLATE=
+  *     per-query numbers are attributable; within a family every memo
+  *     lives until the boundary, the same rule as perfbench's
+  *     Queries.scala. SPARK_GRAFT_BENCH_ISOLATE=
   *     query releases before every query (fully cold caches), =none
   *     restores the r3 whole-sweep behavior. The output reports
   *     per-family subtotals (sum of per-query mins) under "families".
@@ -136,23 +138,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val n = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt)
     // Local-iteration filter: run only queries whose name starts with the
     // given prefix (e.g. ONLY=q_dedup). Never set by the driver.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Same session zone as Verify/tests (NOTES rule 7): Tables.events'
-      // Spark-4 path casts TIMESTAMP_NTZ under the session zone, so a
-      // non-UTC bench host would time event/asof/range queries on
-      // DIFFERENT window/session groupings than the oracle verified.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder(cpus, "graft-bench")
       // AQE coalescing knobs, env-overridable for A/B only — defaults
       // are Spark's. r16 re-measured `parallelismFirst=false` at a 256KB
       // advisory (16× below r15's smallest trial): still a net loss
@@ -257,13 +248,6 @@ object Bench {
             if (g0 < 0) -1L else gcMillis() - g0,
             if (j0 < 0) -1L else compileMillis() - j0)
         }
-        // Release memos whose last in-family consumer this query was —
-        // within a family the memos otherwise accumulate for the family's
-        // whole tail (r4 defect 1: by q_dedup_ngram_capped six pinned
-        // tables compete for the storage pool and warmer runs get SLOWER).
-        // INTRA_RELEASE=0 restores the r4 behavior for A/B attribution.
-        if (sys.env.getOrElse("SPARK_GRAFT_BENCH_INTRA_RELEASE", "1") != "0")
-          graft.queries.Det.releaseAfter(spark, name)
         QDetail(name, timed.map(_._1), timed.map(_._2), timed.map(_._3),
           timed.map(_._4), timed.map(_._5), timed.map(_._6), timed.map(_._7), err)
       }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Empirical scaling curve (r12 VERDICT #5): run the headline families
   * at several scale factors and emit per-query sf-to-sf wall ratios
   * next to the data ratio, so "survives a scale-up" is a measurement,
@@ -56,18 +54,10 @@ object BenchScale {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BenchScale <sfDir1> <sfDir2> ...")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val n = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus, "graft-bench-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // A ScaleQueries name absent from the registry is a bug (typo or a

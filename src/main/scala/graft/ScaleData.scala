@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale-factor inflater for the empirical scaling curve (r12 VERDICT
@@ -44,14 +44,8 @@ object ScaleData {
     require(args.length == 3, "usage: ScaleData <srcSfDir> <outDir> <replicas>")
     val Array(src, out, rStr) = args
     val replicas = rStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = GraftSession.builder(cpus, "graft-scale-data").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def t(name: String) = spark.read.parquet(s"$src/$name.parquet")

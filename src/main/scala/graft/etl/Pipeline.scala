@@ -46,15 +46,8 @@ object Pipeline {
 
   def main(args: Array[String]): Unit = {
     val workDir = args.headOption.getOrElse("/tmp/graft_pipeline")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .appName("graft-etl-pipeline")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.GraftSession.builder(cpus, "graft-etl-pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, workDir)
     finally spark.stop()

@@ -72,14 +72,8 @@ object StarAdapter {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val workDir = args.drop(1).headOption.getOrElse("/tmp/graft_star_pipeline")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .appName("graft-star-pipeline").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.GraftSession.builder(cpus, "graft-star-pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val (n1, n2) = runPipeline(spark, sfDir, workDir)

@@ -619,9 +619,7 @@ object AnnIndex {
       // Wide codes memoized per RESOLVED artifact version (a rebuild
       // commits a new version dir → new key; see Similarity's wide-ADC
       // note — the widening is one pass over the loaded code table).
-      graft.queries.Det.memo(spark,
-          s"ann.codesw:${tablePath(idxDir, "pq_codes")}",
-          Some("q_knn_served_pq")) {
+      graft.queries.Det.memo(spark, s"ann.codesw:${tablePath(idxDir, "pq_codes")}") {
         Similarity.pqCodesWide(pqCodes(spark, idxDir))
       },
       Similarity.pqLutWideFor(spark, corpusDir, pqCodebook(spark, idxDir),

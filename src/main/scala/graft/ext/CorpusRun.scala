@@ -95,14 +95,8 @@ object CorpusRun {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: CorpusRun <in.jsonl[.gz]> <outDir> [benchmarkDir] [embeddingsParquet] [maxDocsPerSource]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .appName("graft-corpus-run").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.GraftSession.builder(cpus, "graft-corpus-run").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       // 4th arg: a (doc_id, embedding array<float>) parquet enabling the

@@ -26,13 +26,11 @@ object Core {
     */
   private def aggLineitem(spark: SparkSession, dir: String): DataFrame =
     Staged.scan(spark, dir, "lineitem", "core.aggli",
-      Set("q_agg_customer", "q_agg_product", "q_agg_time"),
       Seq("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
         "l_extendedprice", "l_discount", "l_shipdate"), "l_orderkey")
 
   private def aggOrders(spark: SparkSession, dir: String): DataFrame =
     Staged.scan(spark, dir, "orders", "core.aggord",
-      Set("q_agg_customer", "q_agg_time"),
       Seq("o_orderkey", "o_custkey", "o_orderdate"), "o_orderkey")
 
   /** A1 — customer analytics (generate-asset.scala:57-84) translated to the

@@ -48,11 +48,9 @@ object Dedup {
     * Lifecycle (and the stale-on-rewrite caveat) via Det.memo/releasePins.
     */
   private def sharedShingles(spark: SparkSession, dir: String): DataFrame =
-    // Two families build this: q_dedup_* (last in-family consumer
-    // q_dedup_simhash) and q_graph_pagerank's MinHash rebuild — release
-    // after whichever finishes, so neither family's tail carries it.
-    Det.memoMulti(spark, s"dedup.shingles:$dir",
-        Set("q_dedup_simhash", "q_graph_pagerank")) {
+    // Two families build this: q_dedup_* and q_graph_pagerank's MinHash
+    // rebuild; each family's boundary release drops it.
+    Det.memo(spark, s"dedup.shingles:$dir") {
       withShingles(documents(spark, dir)).select(col("doc_id"), col("shingles"))
     }
 
@@ -67,7 +65,7 @@ object Dedup {
     * self-joins on the shingle key reuse without a fresh exchange.
     */
   private def sharedPostings(spark: SparkSession, dir: String): DataFrame =
-    Det.memo(spark, s"dedup.postings:$dir", Some("q_dedup_ngram_capped")) {
+    Det.memo(spark, s"dedup.postings:$dir") {
       withDf(sharedShingles(spark, dir)
         .withColumn("n_sh", size(col("shingles")))
         .select(col("doc_id"), col("n_sh"), explode(col("shingles")).as("shingle")))
@@ -131,7 +129,7 @@ object Dedup {
     // (m, j) -> least(m, md5(j || ':' || s))))` that the DuckDB oracle
     // still states, but one tight loop instead of a per-shingle
     // 12-array allocation.
-    val sig = Det.memo(spark, s"dedup.sig:$dir", Some("q_dedup_minhash")) {
+    val sig = Det.memo(spark, s"dedup.sig:$dir") {
       sh.withColumn("sig", expr("minhash_sig(shingles)"))
         .select(col("doc_id"), col("sig"))
     }
@@ -193,8 +191,7 @@ object Dedup {
     * per corpus.
     */
   private def pairSharedCounts(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"dedup.pairsh:$dir",
-        Set("q_dedup_ngram", "q_dedup_containment")) {
+    Det.memo(spark, s"dedup.pairsh:$dir") {
       // The postings table feeds both self-join sides; deriving from the
       // shared pinned shingle table means the shingle derivation (and
       // its InferFiltersFromGenerate clone) never re-runs per side.
@@ -320,10 +317,10 @@ object Dedup {
     // exceeds the cap — the adaptive bypass falls out structurally (two
     // near-free empty broadcasts, ub_i = shared_r exactly, survivors =
     // the true pairs) with no driver-side scalar or plan switch.
-    // Memoized like the postings themselves (same release consumer):
+    // Memoized like the postings themselves:
     // both broadcast sides read one tiny cached table instead of each
     // re-aggregating the full postings cache per bench run.
-    val hdTab = Det.memo(spark, s"dedup.hdtab:$dir", Some("q_dedup_ngram_capped")) {
+    val hdTab = Det.memo(spark, s"dedup.hdtab:$dir") {
       post.filter(col("df") > cap)
         .groupBy(col("doc_id")).agg(count(lit(1)).cast("double").as("hd"))
     }
@@ -366,8 +363,7 @@ object Dedup {
     // builder defers all work to the caller's action. A malformed
     // conf value falls back to the default rather than poisoning the
     // query with a NumberFormatException.
-    val survivorsMemo = Det.memo(spark, s"dedup.survivors:$dir",
-      Some("q_dedup_ngram_capped"))(survivors)
+    val survivorsMemo = Det.memo(spark, s"dedup.survivors:$dir")(survivors)
     val maxBcastRows = spark.conf
       .getOption("spark.graft.dedup.survivorsBroadcastMaxRows")
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
@@ -431,7 +427,7 @@ object Dedup {
     val post = sharedPostings(spark, dir)
     // df ≥ 2: single-doc shingles cannot pair (see pairSharedCounts).
     val capped = post.filter(col("df") <= cap && col("df") >= 2)
-    val hdTab = Det.memo(spark, s"dedup.hdtabc:$dir", Some("q_dedup_containment_capped")) {
+    val hdTab = Det.memo(spark, s"dedup.hdtabc:$dir") {
       post.filter(col("df") > cap)
         .groupBy(col("doc_id")).agg(count(lit(1)).cast("double").as("hd"))
     }
@@ -450,8 +446,7 @@ object Dedup {
     // Same measured-cardinality broadcast gate as the capped Jaccard:
     // sparse survivors broadcast past the shingle cache; a dense corpus
     // falls back to a shuffled join instead of an OOM.
-    val survivorsMemo = Det.memo(spark, s"dedup.csurvivors:$dir",
-      Some("q_dedup_containment_capped"))(survivors)
+    val survivorsMemo = Det.memo(spark, s"dedup.csurvivors:$dir")(survivors)
     val maxBcastRows = spark.conf
       .getOption("spark.graft.dedup.survivorsBroadcastMaxRows")
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
@@ -519,7 +514,7 @@ object Dedup {
     // fold — same bit-majority rule, and the DuckDB oracle still states
     // (and gates) the fold form. Memoized: simhash is read by the output
     // + 4 band extractions + both self-join sides.
-    val fp = Det.memo(spark, s"dedup.fp:$dir", Some("q_dedup_simhash")) {
+    val fp = Det.memo(spark, s"dedup.fp:$dir") {
       sharedShingles(spark, dir)
         .withColumn("simhash", expr("simhash32(shingles)"))
         .select(col("doc_id"), col("simhash"))
@@ -853,13 +848,9 @@ object Dedup {
     // ONE fixpoint per (session, dir): memoized so dedupKeep and bench
     // repetitions reuse the materialized labels — a per-call pin re-ran
     // the whole iterative join loop for every consumer (r3 defect: ~22%
-    // of the warm bench sweep).
-    // memoMulti: q_dedup_keep AND q_dedup_sizes both consume the labels;
-    // the bench's releaseAfter frees the memo only after the LAST
-    // in-family consumer (sizes sorts after keep), so neither re-runs
-    // the fixpoint.
-    val labels = Det.memoMulti(spark, s"dedup.labels:$dir",
-        Set("q_dedup_keep", "q_dedup_sizes")) {
+    // of the warm bench sweep). q_dedup_keep and q_dedup_sizes both
+    // read it; it lives until the family-boundary release.
+    val labels = Det.memo(spark, s"dedup.labels:$dir") {
       connectedComponents(
         dedupMinHash(spark, dir)
           .select(col("doc_a").as("src"), col("doc_b").as("dst")))._1
@@ -1056,7 +1047,7 @@ object Dedup {
     // Symmetrized, deduped edge list (pairs are distinct with a < b, so
     // the union of both directions is already duplicate-free). Memoized:
     // the rank loop reads it 5× and the MinHash pipeline must not rerun.
-    val sym = Det.memo(spark, s"dedup.sym:$dir", Some("q_graph_pagerank")) {
+    val sym = Det.memo(spark, s"dedup.sym:$dir") {
       val pairs = dedupMinHash(spark, dir).select(col("doc_a"), col("doc_b"))
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
@@ -1068,7 +1059,7 @@ object Dedup {
     // width is baked into the fixpoint session so no restore races
     // against lazy materialization. The memoized result is rebased into
     // the caller's session — every later consumer reads one fixpoint.
-    val ranked = Det.memo(spark, s"dedup.pagerank:$dir", Some("q_graph_pagerank")) {
+    val ranked = Det.memo(spark, s"dedup.pagerank:$dir") {
       val nEdges = sym.count()
       val nPart = math.max(1, math.min(spark.sparkContext.defaultParallelism,
         (nEdges / 65536L + 1L).toInt))
@@ -1143,7 +1134,7 @@ object Dedup {
   def dedupIncrementalOver(spark: SparkSession, dir: String,
                            isOld: org.apache.spark.sql.Column): DataFrame = {
     val sh = sharedShingles(spark, dir)
-    val banded = Det.memo(spark, s"dedup.sig:$dir", Some("q_dedup_minhash")) {
+    val banded = Det.memo(spark, s"dedup.sig:$dir") {
       sh.withColumn("sig", expr("minhash_sig(shingles)"))
         .select(col("doc_id"), col("sig"))
     }
@@ -1221,8 +1212,7 @@ object Dedup {
     * both overlap queries via a memo so the derivation runs once.
     */
   private def sourceShingles(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"dedup.srcsh:$dir",
-        Set("q_source_overlap", "q_source_overlap_sig")) {
+    Det.memo(spark, s"dedup.srcsh:$dir") {
       withShingles(documents(spark, dir))
         .select(col("source"), explode(col("shingles")).as("shingle"))
         .distinct()
@@ -1253,7 +1243,7 @@ object Dedup {
     * this exact form is its accuracy baseline.)
     */
   private def sourceShingleSetCounts(spark: SparkSession, dir: String): DataFrame =
-    Det.memo(spark, s"dedup.srcshset:$dir", Some("q_source_overlap")) {
+    Det.memo(spark, s"dedup.srcshset:$dir") {
       sourceShingles(spark, dir).groupBy(col("shingle"))
         .agg(sort_array(collect_set(col("source"))).as("srcs"))
         // Tens of kB, but the per-run pair EXPLODE over it is CPU-heavy
@@ -1327,7 +1317,7 @@ object Dedup {
     // run would persist; memoized (r15) so the per-run work is the
     // S²-pair join over S×12 rows, not 12 md5 evaluations per posting
     // (~8 CPU-s at sf0.1).
-    val sig = Det.memo(spark, s"dedup.srcsig:$dir", Some("q_source_overlap_sig")) {
+    val sig = Det.memo(spark, s"dedup.srcsig:$dir") {
       sourceShingles(spark, dir)
         .select(col("source"), col("shingle"), explode(sequence(lit(0), lit(11))).as("j"))
         .withColumn("h", md5(concat(col("j").cast("string"), lit(":"), col("shingle"))))

@@ -69,35 +69,18 @@ object Det {
     * both self-join sides — scans the same cache. At 100 TB the
     * equivalent is a staged write of the signature table.
     *
-    * Lifecycle: every pin is registered per owning session;
-    * `releasePins(spark)` unpersists them all after the last consumer
-    * (Verify after its dump, Bench after its sweep, suites in cleanup),
-    * so a long-lived session doesn't accumulate dead InMemoryRelations.
+    * Lifecycle: every pin is registered per owning session and lives
+    * until a release: `releasePins(spark)` unpersists them all (Verify
+    * after its dump, the benches at each family boundary, suites in
+    * cleanup), `releaseForDir` drops the memos of one source dir and
+    * `releaseKeyPrefix` those of one artifact version, so a long-lived
+    * session doesn't accumulate dead InMemoryRelations.
     */
   private val pinRegistry = scala.collection.concurrent.TrieMap
     .empty[org.apache.spark.sql.SparkSession,
            scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]]
   private val memoRegistry = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-  // memo key -> the declared consumer set: the query names that read the
-  // memo last (one per bench family when shared across families — sim.norm
-  // feeds q_ann/q_embed/q_hard/q_knn). The memo is released only when the
-  // set is EXHAUSTED: releaseAfter strikes the finished query from a
-  // per-key `remaining` set and frees the memo when it empties (r10
-  // ADVICE: release-on-ANY let q_dedup_keep free the labels memo while
-  // q_dedup_sizes still needed it, re-running the CC fixpoint once per
-  // sweep). Consumers that never run (BENCH_ONLY filter, a family-boundary
-  // releasePins) leave a non-empty remainder — releasePins clears it.
-  // Declared AT the memo site so the topology lives next to the code it
-  // describes; consulted by releaseAfter.
-  private val lastConsumer = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), Set[String]]
-  // memo key -> consumers that have NOT yet finished. Initialized when the
-  // memo is BUILT (not on every memoMulti call — later consumers re-invoke
-  // memoMulti with the same declaration, which must not reset the strike
-  // count). Entries die with the memo (releaseAfter / releasePins / sweep).
-  private val remaining = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), Set[String]]
 
   /** Drop entries owned by STOPPED sessions — a consumer that never
     * calls releasePins must not leak its session (and every pinned plan)
@@ -106,8 +89,6 @@ object Det {
     */
   private def sweepStopped(): Unit = {
     memoRegistry.keys.filter(_._1.sparkContext.isStopped).foreach(memoRegistry.remove)
-    lastConsumer.keys.filter(_._1.sparkContext.isStopped).foreach(lastConsumer.remove)
-    remaining.keys.filter(_._1.sparkContext.isStopped).foreach(remaining.remove)
     pinRegistry.keys.filter(_.sparkContext.isStopped).foreach(pinRegistry.remove)
   }
 
@@ -161,49 +142,14 @@ object Det {
     * later callers reuse the same InMemoryRelation — the in-session twin
     * of a staged intermediate table at 100 TB. Assumes the underlying
     * source is immutable for the session: a rewrite of the parquet under
-    * the same path would serve stale data until `releasePins`.
+    * the same path would serve stale data until a release.
     *
-    * `releaseAfterQuery` declares the memo's LAST in-family consumer (a
-    * `SparkEntry.queries` name): once the bench finishes that query it
-    * calls `releaseAfter`, which frees the memo so the family's tail
-    * doesn't pay storage pressure for a table nothing will read again
-    * (r4 defect 1: six dedup memos accumulated across the family and the
-    * warmest runs got the slowest). Queries outside the bench (Verify,
-    * specs) never call releaseAfter, so for them it's inert.
+    * `cache = false`: the built frame is registered for release but NOT
+    * wrapped in a columnar cache (see pin(df, cache)) — the build must
+    * return an already-materialized frame (localCheckpoint).
     */
-  def memo(spark: org.apache.spark.sql.SparkSession, key: String,
-           releaseAfterQuery: Option[String] = None)
+  def memo(spark: org.apache.spark.sql.SparkSession, key: String, cache: Boolean = true)
           (build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    memoMulti(spark, key, releaseAfterQuery.toSet)(build)
-
-  /** Memo with a multi-query consumer set: released only when EVERY name
-    * in `releaseAfterAllOf` has passed through `releaseAfter` (set
-    * exhausted). The bench's family-boundary `releasePins` still clears
-    * any remainder, so a consumer filtered out of the sweep cannot pin
-    * the memo past its family.
-    */
-  def memoMulti(spark: org.apache.spark.sql.SparkSession, key: String,
-                releaseAfterAllOf: Set[String])
-               (build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    memoMulti(spark, key, releaseAfterAllOf, cache = true)(build)
-
-  /** `cache = false`: the built frame is registered and release-tracked
-    * but NOT wrapped in a columnar cache (see pin(df, cache)) — the
-    * build must return an already-materialized frame (localCheckpoint).
-    */
-  def memoMulti(spark: org.apache.spark.sql.SparkSession, key: String,
-                releaseAfterAllOf: Set[String], cache: Boolean)
-               (build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    if (releaseAfterAllOf.nonEmpty) {
-      // Last-writer-wins is fine when every site agrees; two sites
-      // declaring DIFFERENT consumers for one key would make release
-      // timing depend on call order — surface that instead of hiding it.
-      val prev = lastConsumer.put((spark, key), releaseAfterAllOf)
-      prev.filter(_ != releaseAfterAllOf).foreach { p =>
-        System.err.println(
-          s"[Det] memo '$key' re-registered with releaseAfter=$releaseAfterAllOf (was $p)")
-      }
-    }
     memoRegistry.get((spark, key)) match {
       case Some(df) => df
       case None =>
@@ -211,12 +157,8 @@ object Det {
           System.err.println(s"[Det] building memo $key")
         val df = pin(build, cache)
         memoRegistry.put((spark, key), df)
-        // Strike-set born at build time; a re-build after release starts a
-        // fresh count (the memo is a new InMemoryRelation).
-        if (releaseAfterAllOf.nonEmpty) remaining.put((spark, key), releaseAfterAllOf)
         df
     }
-  }
 
   /** Unpersist a released frame AND any persisted RDD a LogicalRDD in its
     * plan wraps. Memos of fixpoint results are rebased over a
@@ -262,36 +204,26 @@ object Det {
     (fromMemos ++ fromPins).toSet
   }
 
-  /** Strike `queryName` from every owning memo's remaining-consumer set;
-    * release (unpersist + evict) the memos whose set is thereby exhausted,
-    * so a later out-of-order reuse re-pins fresh.
+  /** Release (evict + deep-unpersist) the memos of `spark` whose key
+    * satisfies `pred`. A memo is ALSO a pin (memo() registers the built
+    * frame via pin()), so the released frames leave the pin registry
+    * BEFORE the protect set is computed — otherwise each released memo's
+    * own checkpoint-backed LogicalRDD ids re-enter liveLogicalRddIds via
+    * fromPins and the deep unpersist never fires (self-protect): the
+    * checkpoint blocks would linger until releasePins. Only survivors
+    * protect.
     */
-  def releaseAfter(spark: org.apache.spark.sql.SparkSession, queryName: String): Unit = {
-    val released = remaining.collect {
-      case (k @ (s, _), qs) if (s eq spark) && qs.contains(queryName) => (k, qs - queryName)
-    }.flatMap { case (k, rest) =>
-      if (rest.nonEmpty) { remaining.update(k, rest); None }
-      else {
-        remaining.remove(k)
-        lastConsumer.remove(k)
-        memoRegistry.remove(k)
-      }
-    }
-    if (released.nonEmpty) {
-      // A memo is ALSO a pin (memo() registers the built frame via
-      // pin()), so the released frames must leave the pin registry
-      // BEFORE the protect set is computed — otherwise each released
-      // memo's own checkpoint-backed LogicalRDD ids re-enter
-      // liveLogicalRddIds via fromPins and the deep unpersist never
-      // fires (self-protect): the checkpoint blocks would linger until
-      // releasePins, the exact storage pressure this path exists to
-      // shed.
+  private def releaseMemos(spark: org.apache.spark.sql.SparkSession)
+                          (pred: String => Boolean): Unit = {
+    val memos = memoRegistry.keys
+      .filter { case (s, k) => (s eq spark) && pred(k) }.toList
+      .flatMap(memoRegistry.remove)
+    if (memos.nonEmpty) {
       pinRegistry.get(spark).foreach { buf =>
-        buf.synchronized { buf.filterInPlace(d => !released.exists(_ eq d)) }
+        buf.synchronized { buf.filterInPlace(d => !memos.exists(_ eq d)) }
       }
-      // Protect set computed AFTER eviction: only survivors protect.
       val protectIds = liveLogicalRddIds(spark)
-      released.foreach(unpersistDeep(_, protectIds))
+      memos.foreach(unpersistDeep(_, protectIds))
     }
   }
 
@@ -303,24 +235,9 @@ object Det {
     * AnnIndex.maintainStream runs both per micro-batch.
     */
   def releaseForDir(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val suffix = s":$dir"
     // Value memos go wholesale (cheap to re-collect; never stale).
     valueRegistry.keys.filter(_._1 eq spark).foreach(valueRegistry.remove)
-    val keys = memoRegistry.keys
-      .filter { case (s, k) => (s eq spark) && k.endsWith(suffix) }.toList
-    val memos = keys.flatMap(memoRegistry.remove)
-    keys.foreach { k => lastConsumer.remove(k); remaining.remove(k) }
-    if (memos.nonEmpty) {
-      // Same self-protect discipline as releaseAfter: evict from the pin
-      // registry FIRST so a released memo's own checkpoint-backed
-      // LogicalRDD cannot protect itself, then deep-unpersist with the
-      // survivors' protect set.
-      pinRegistry.get(spark).foreach { buf =>
-        buf.synchronized { buf.filterInPlace(d => !memos.exists(_ eq d)) }
-      }
-      val protectIds = liveLogicalRddIds(spark)
-      memos.foreach(unpersistDeep(_, protectIds))
-    }
+    releaseMemos(spark)(_.endsWith(s":$dir"))
   }
 
   /** Release memos whose KEY starts with `keyPrefix` — the surgical drop
@@ -328,21 +245,10 @@ object Det {
     * (ext.AnnIndex.rebuildIfDrifted: the replaced version's wide-codes
     * cache — keyed by its resolved version path, which releaseForDir's
     * `:corpusDir` suffix filter never matches — would otherwise linger
-    * until releasePins). Same self-protect discipline as releaseAfter.
+    * until releasePins).
     */
-  def releaseKeyPrefix(spark: org.apache.spark.sql.SparkSession, keyPrefix: String): Unit = {
-    val keys = memoRegistry.keys
-      .filter { case (s, k) => (s eq spark) && k.startsWith(keyPrefix) }.toList
-    val memos = keys.flatMap(memoRegistry.remove)
-    keys.foreach { k => lastConsumer.remove(k); remaining.remove(k) }
-    if (memos.nonEmpty) {
-      pinRegistry.get(spark).foreach { buf =>
-        buf.synchronized { buf.filterInPlace(d => !memos.exists(_ eq d)) }
-      }
-      val protectIds = liveLogicalRddIds(spark)
-      memos.foreach(unpersistDeep(_, protectIds))
-    }
-  }
+  def releaseKeyPrefix(spark: org.apache.spark.sql.SparkSession, keyPrefix: String): Unit =
+    releaseMemos(spark)(_.startsWith(keyPrefix))
 
   /** Unpersist every pin owned by `spark` and evict its memo entries.
     * Memo eviction matters: an unpersisted-but-memoized DataFrame would
@@ -354,8 +260,6 @@ object Det {
     valueRegistry.keys.filter(_._1 eq spark).foreach(valueRegistry.remove)
     val memos = memoRegistry.keys.filter(_._1 eq spark).toList
       .flatMap(memoRegistry.remove)
-    lastConsumer.keys.filter(_._1 eq spark).foreach(lastConsumer.remove)
-    remaining.keys.filter(_._1 eq spark).foreach(remaining.remove)
     memos.foreach(unpersistDeep(_))
     pinRegistry.remove(spark).foreach { buf =>
       buf.synchronized { buf.foreach(unpersistDeep(_)); buf.clear() }

@@ -43,8 +43,7 @@ object Events {
     * staged, REVERTED to parquet).
     */
   private def stagedEvents(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"events.staged:$dir",
-        Set("q_events_anomaly", "q_events_funnel"), cache = false) {
+    Det.memo(spark, s"events.staged:$dir", cache = false) {
       val n = math.max(1, spark.sparkContext.defaultParallelism)
       events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -58,8 +57,7 @@ object Events {
     * 0.46 → 0.26 s warm when the parse was staged+spread).
     */
   private def stagedEventsJson(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"events.stagedjson:$dir",
-        Set("q_events_json"), cache = false) {
+    Det.memo(spark, s"events.stagedjson:$dir", cache = false) {
       val n = math.max(1, spark.sparkContext.defaultParallelism)
       events(spark, dir)
         .select(col("event_type"), col("value"), col("props"))
@@ -310,7 +308,7 @@ object Events {
     // full fact scan + shuffle to build, and the bench runs each query
     // n times — without the memo run 1 pays a rebuild the warm runs
     // don't (r6 VERDICT #7: run-1 was 2.2× run-3 from exactly this).
-    val st = Det.memo(spark, s"events.anomstats:$dir", Some("q_events_anomaly")) {
+    val st = Det.memo(spark, s"events.anomstats:$dir") {
       anomalyStats(e)
     }
     scoreAnomalies(e, st)

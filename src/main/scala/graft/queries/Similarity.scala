@@ -46,13 +46,9 @@ object Similarity {
     * of the same norm scan.
     */
   private def withNorm(spark: SparkSession, dir: String): DataFrame =
-    // Four bench families build this; each family's last in-family
-    // consumer releases it (q_embed_quantize / q_select_diverse never
-    // read it, so holding it through their runs is pure storage
-    // pressure). A later family re-pins fresh.
-    Det.memoMulti(spark, s"sim.norm:$dir",
-        Set("q_ann_recall", "q_embed_neardup", "q_hard_negatives", "q_knn_topk",
-          "q_knn_filtered", "q_ann_recall_filtered")) {
+    // Four bench families build this; each family's boundary release
+    // drops it and a later family re-pins fresh.
+    Det.memo(spark, s"sim.norm:$dir") {
       embeddings(spark, dir)
         .withColumn("norm", expr(s"sqrt(${dotExpr("embedding", "embedding")})"))
     }
@@ -145,8 +141,7 @@ object Similarity {
   val knnLsh: Q = (spark, dir) => {
     // Memoized like the norm scan: q_ann_recall embeds this pipeline as a
     // subplan and must reuse the same sketch cache, not pin a second copy.
-    val v = Det.memoMulti(spark, s"sim.sketch:$dir",
-        Set("q_ann_recall", "q_knn_lsh")) {
+    val v = Det.memo(spark, s"sim.sketch:$dir") {
       withNorm(spark, dir).withColumn("sketch", expr(sketchExpr))
     }
     val banded = v.select(col("vec_id"), col("label"), col("embedding"), col("norm"),
@@ -289,7 +284,7 @@ object Similarity {
     * kernel the text-dedup groups run).
     */
   val embedGroups: Q = (spark, dir) => {
-    val labels = Det.memoMulti(spark, s"sim.embgroups:$dir", Set("q_embed_groups")) {
+    val labels = Det.memo(spark, s"sim.embgroups:$dir") {
       Dedup.connectedComponents(
         embedNearDup(spark, dir)
           .select(col("vec_a").as("src"), col("vec_b").as("dst")))._1
@@ -363,11 +358,10 @@ object Similarity {
     * reports, each n bench runs), and without the memo every consumer
     * pays the full embedding explode + aggregation — the staged
     * intermediate a 100 TB IVF index build writes once. Tiny
-    * (|labels|·64 rows); released when either family's last consumer
-    * finishes (alphabetical bench order within q_ann / q_knn).
+    * (|labels|·64 rows).
     */
   private def ivfCentroids(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"sim.cent:$dir", Set("q_ann_recall_mp", "q_knn_ivf_mp")) {
+    Det.memo(spark, s"sim.cent:$dir") {
       withNorm(spark, dir)
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "valf")))
         .select(col("label"), (col("pos") + 1).as("d"),
@@ -641,8 +635,7 @@ object Similarity {
     * report (`q_ann_recall_mp`).
     */
   private def kmeansCentroids(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"sim.kmcent:$dir",
-        Set("q_ann_recall_mp", "q_knn_ivf_kmeans", "q_knn_ivfpq", "q_knn_ivfpq_res", "q_ann_recall_pq", "q_ann_recall_filtered")) {
+    Det.memo(spark, s"sim.kmcent:$dir") {
       val vd = vdF(spark, dir)
       val dims = vd.select(col("vec_id"), posexplode(col("emb_d")).as(Seq("pos", "val")))
         .select(col("vec_id"), (col("pos") + 1).as("d"), col("val"))
@@ -661,8 +654,7 @@ object Similarity {
     * quantizer — the membership a real IVF index stores).
     */
   private def kmeansMembership(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"sim.kmasg:$dir",
-        Set("q_ann_recall_mp", "q_knn_ivf_kmeans", "q_knn_ivfpq", "q_knn_ivfpq_res", "q_ann_recall_pq", "q_ann_recall_filtered")) {
+    Det.memo(spark, s"sim.kmasg:$dir") {
       kmAssign(vdF(spark, dir), kmeansCentroids(spark, dir))
     }
 
@@ -870,8 +862,7 @@ object Similarity {
     val vd = vdF(spark, dir)
     val base = vd.filter(col("vec_id") % 5 =!= 0)
     val fresh = vd.filter(col("vec_id") % 5 === 0)
-    val cent = Det.memoMulti(spark, s"sim.kmcentincr:$dir",
-        Set("q_knn_ivf_incr", "q_knn_drift_decide")) {
+    val cent = Det.memo(spark, s"sim.kmcentincr:$dir") {
       val dims = base
         .select(col("vec_id"), posexplode(col("emb_d")).as(Seq("pos", "val")))
         .select(col("vec_id"), (col("pos") + 1).as("d"), col("val"))
@@ -1060,7 +1051,7 @@ object Similarity {
     val vd = vdF(spark, dir)
     val base = vd.filter(col("vec_id") % 5 =!= 0)
     val fresh = vd.filter(col("vec_id") % 5 === 0)
-    val cb = Det.memoMulti(spark, s"sim.pqcbincr:$dir", Set("q_knn_pq_incr")) {
+    val cb = Det.memo(spark, s"sim.pqcbincr:$dir") {
       pqTrain(base, ":pqseed")
     }
     // pqAssign drops the assignment distance; the drift report IS that
@@ -1648,8 +1639,7 @@ object Similarity {
   }
 
   private def pqCodebook(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"sim.pqcb:$dir",
-        Set("q_knn_pq", "q_knn_ivfpq", "q_ann_recall_pq")) {
+    Det.memo(spark, s"sim.pqcb:$dir") {
       pqTrain(vdF(spark, dir), ":pqseed")
     }
 
@@ -1659,8 +1649,7 @@ object Similarity {
     * index shape (8 codes per vector, codes within 1..pqK).
     */
   def pqCodes(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"sim.pqcode:$dir",
-        Set("q_knn_pq", "q_knn_ivfpq", "q_ann_recall_pq")) {
+    Det.memo(spark, s"sim.pqcode:$dir") {
       pqAssign(pqSubv(vdF(spark, dir)), pqCodebook(spark, dir))
     }
 
@@ -1773,8 +1762,7 @@ object Similarity {
     * path memoizes per resolved artifact version in ext.AnnIndex).
     */
   private def pqCodesWideMemo(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"sim.pqcodew:$dir",
-        Set("q_knn_pq", "q_knn_ivfpq", "q_ann_recall_pq")) {
+    Det.memo(spark, s"sim.pqcodew:$dir") {
       pqCodesWide(pqCodes(spark, dir))
     }
 
@@ -1979,8 +1967,7 @@ object Similarity {
     * reproduces it bit-for-bit.
     */
   private def kmResiduals(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"sim.kmres:$dir",
-        Set("q_knn_ivfpq_res", "q_ann_recall_pq")) {
+    Det.memo(spark, s"sim.kmres:$dir") {
       vdF(spark, dir)
         .join(kmeansMembership(spark, dir), "vec_id")
         .join(broadcast(kmeansCentroids(spark, dir)), "cluster")
@@ -1992,8 +1979,7 @@ object Similarity {
     * trained on residuals with an independent seed salt.
     */
   private def pqResCodebook(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"sim.pqrcb:$dir",
-        Set("q_knn_ivfpq_res", "q_ann_recall_pq")) {
+    Det.memo(spark, s"sim.pqrcb:$dir") {
       pqTrain(kmResiduals(spark, dir), ":pqrseed")
     }
 
@@ -2001,8 +1987,7 @@ object Similarity {
     * vector's offset from its inverted list's centroid.
     */
   private def pqResCodes(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"sim.pqrcode:$dir",
-        Set("q_knn_ivfpq_res", "q_ann_recall_pq")) {
+    Det.memo(spark, s"sim.pqrcode:$dir") {
       pqAssign(pqSubv(kmResiduals(spark, dir)), pqResCodebook(spark, dir))
     }
 

@@ -79,8 +79,7 @@ object Sketch {
     d.withColumn("hv", expr(hvExpr("tok")))
 
   private def hashedToks(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"sketch.toks:$dir",
-        Set("q_sketch_hll", "q_sketch_kmv", "q_sketch_kmv_merge")) {
+    Det.memo(spark, s"sketch.toks:$dir") {
       hashTokens(documents(spark, dir)
         .select(col("source"), explode(split(col("text"), " ")).as("tok")))
     }

@@ -36,8 +36,7 @@ import graft.Tables
 object Staged {
 
   /** Memoized projected+spread scan of `table` under `memoKey:dir`,
-    * released after all `consumers` have run (bench releaseAfter) or at
-    * the family boundary / end of sweep (releasePins).
+    * released at the family boundary / end of sweep (releasePins).
     *
     * Materialized as a localCheckpoint ROW RDD, not a columnar cache:
     * the first staging attempt used Det's `.cache()` pin and every
@@ -49,8 +48,8 @@ object Staged {
     * stages.
     */
   def scan(spark: SparkSession, dir: String, table: String, memoKey: String,
-           consumers: Set[String], cols: Seq[String], spreadKey: String): DataFrame =
-    Det.memoMulti(spark, s"$memoKey:$dir", consumers, cache = false) {
+           cols: Seq[String], spreadKey: String): DataFrame =
+    Det.memo(spark, s"$memoKey:$dir", cache = false) {
       val n = math.max(1, spark.sparkContext.defaultParallelism)
       Tables.table(spark, dir, table)
         .select(cols.map(col): _*)
@@ -59,9 +58,6 @@ object Staged {
     }
 
   // ---- the shared-SQL (q_sql) family: one staged lineitem + orders ----
-  // Consumer sets list every q_sql query that READS the staged table;
-  // memoMulti releases when the set is exhausted (the bench strikes each
-  // finished query's name), so the memos die inside the family.
 
   /** Union of lineitem columns referenced by the q_sql family texts. */
   private val sqlLineitemCols = Seq(
@@ -72,15 +68,6 @@ object Staged {
   private val sqlOrdersCols = Seq(
     "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice",
     "o_orderpriority", "o_orderstatus")
-
-  private val sqlLineitemConsumers = Set(
-    "q_sql_big_orders", "q_sql_in_notin", "q_sql_local_volume",
-    "q_sql_market_share", "q_sql_pricing_summary", "q_sql_shipping_priority")
-
-  private val sqlOrdersConsumers = Set(
-    "q_sql_big_orders", "q_sql_exists", "q_sql_in_notin",
-    "q_sql_local_volume", "q_sql_market_share", "q_sql_scalar_subquery",
-    "q_sql_shipping_priority")
 
   /** Register the temp views a shared-SQL text needs. With
     * `stageFacts = true` the two fact tables resolve to the family's
@@ -99,11 +86,11 @@ object Staged {
                        stageFacts: Boolean): Unit =
     tables.foreach {
       case "lineitem" if stageFacts =>
-        scan(spark, dir, "lineitem", "classic.li", sqlLineitemConsumers,
-          sqlLineitemCols, "l_orderkey").createOrReplaceTempView("lineitem")
+        scan(spark, dir, "lineitem", "classic.li", sqlLineitemCols, "l_orderkey")
+          .createOrReplaceTempView("lineitem")
       case "orders" if stageFacts =>
-        scan(spark, dir, "orders", "classic.ord", sqlOrdersConsumers,
-          sqlOrdersCols, "o_orderkey").createOrReplaceTempView("orders")
+        scan(spark, dir, "orders", "classic.ord", sqlOrdersCols, "o_orderkey")
+          .createOrReplaceTempView("orders")
       case t =>
         Tables.table(spark, dir, t).createOrReplaceTempView(t)
     }

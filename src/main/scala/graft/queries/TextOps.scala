@@ -706,11 +706,10 @@ object TextOps {
     * and every learning round inside packBpe2 — without it the corpus
     * explode + word shuffle re-runs once per learning round (5× for the
     * 4-round packer). Vocabulary-sized (the Zipf asymmetry), so the pin
-    * is tiny; released when the last BPE consumer in the bench family
-    * finishes.
+    * is tiny.
     */
   private def wordCounts(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"pack.wcount:$dir", Set("q_pack_bpe2")) {
+    Det.memo(spark, s"pack.wcount:$dir") {
       documents(spark, dir)
         .select(explode(split(col("text"), " ")).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("wcnt"))
@@ -782,7 +781,7 @@ object TextOps {
     * it once and the family-boundary releasePins clears it.)
     */
   private def bpeWordTokMemo(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"pack.wtok:$dir", Set("q_bpe_fertility", "q_pack_bpe")) {
+    Det.memo(spark, s"pack.wtok:$dir") {
       bpeWordTok(spark, dir)
     }
 
@@ -1085,8 +1084,7 @@ object TextOps {
     * the per-doc hit count is co-partitioned with the cache.
     */
   private def contamTrainGrams(spark: SparkSession, dir: String): DataFrame =
-    Det.memoMulti(spark, s"text.contamtrain:$dir",
-        Set("q_text_contamination", "q_text_contamination_bloom")) {
+    Det.memo(spark, s"text.contamtrain:$dir") {
       contamGramsOf(documents(spark, dir).filter(col("doc_id") >= 20))
         .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
     }

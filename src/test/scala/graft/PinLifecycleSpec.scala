@@ -25,7 +25,7 @@ class PinLifecycleSpec extends SparkSpec {
     assert(cm.isEmpty, "releasePins must drop every pinned relation")
   }
 
-  test("releaseAfter deep-frees a released memo's checkpoint blocks (no self-protect)") {
+  test("releaseKeyPrefix frees a released memo's checkpoint blocks") {
     Det.releasePins(spark)
     // A fixpoint-style memo: the memoized frame is rebased over an eager
     // localCheckpoint, so its plan is a LogicalRDD wrapping a persisted
@@ -37,7 +37,7 @@ class PinLifecycleSpec extends SparkSpec {
     // actual shape) — caching the bare LogicalRDD frame itself trips an
     // InMemoryRelation.withOutput attribute-rebase quirk unrelated to
     // this lifecycle.
-    val memo = Det.memo(spark, "test.selfprotect", Some("q_test_done"))(ckpt.where("id >= 0"))
+    val memo = Det.memo(spark, "test.selfprotect")(ckpt.where("id >= 0"))
     memo.count()
     val rdds = memo.queryExecution.logical.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
@@ -45,7 +45,7 @@ class PinLifecycleSpec extends SparkSpec {
     assert(rdds.nonEmpty, "precondition: the memo plan wraps a LogicalRDD")
     assert(rdds.forall(_.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE),
       "precondition: checkpoint RDD is persisted")
-    Det.releaseAfter(spark, "q_test_done")
+    Det.releaseKeyPrefix(spark, "test.selfprotect")
     assert(rdds.forall(_.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE),
       "released memo's checkpoint RDD must be unpersisted (self-protect defeated the release)")
     Det.releasePins(spark)
@@ -54,40 +54,19 @@ class PinLifecycleSpec extends SparkSpec {
   test("a checkpoint RDD shared between memos survives until its LAST owner is released") {
     Det.releasePins(spark)
     val ckpt = spark.range(500).toDF("id").localCheckpoint(true)
-    val a = Det.memo(spark, "test.shared.a", Some("qa"))(ckpt.filter("id % 2 = 0"))
-    val b = Det.memo(spark, "test.shared.b", Some("qb"))(ckpt.filter("id % 2 = 1"))
+    val a = Det.memo(spark, "test.shared.a")(ckpt.filter("id % 2 = 0"))
+    val b = Det.memo(spark, "test.shared.b")(ckpt.filter("id % 2 = 1"))
     a.count(); b.count()
     val rdds = a.queryExecution.logical.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
     assert(rdds.nonEmpty)
-    Det.releaseAfter(spark, "qa")
+    Det.releaseKeyPrefix(spark, "test.shared.a")
     assert(rdds.forall(_.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE),
       "RDD still reachable from a live memo must be protected")
-    Det.releaseAfter(spark, "qb")
+    Det.releaseKeyPrefix(spark, "test.shared.b")
     assert(rdds.forall(_.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE),
       "shared RDD must be freed when its last owner is released")
-    Det.releasePins(spark)
-  }
-
-  test("memoMulti releases only when the declared consumer set is exhausted") {
-    Det.releasePins(spark)
-    // r10 ADVICE: release-on-ANY let q_dedup_keep free the labels memo
-    // while q_dedup_sizes still needed it — the CC fixpoint re-ran once
-    // per sweep. The memo must survive the first consumer and die after
-    // the last, and a later consumer's re-invocation of memoMulti (same
-    // declaration) must NOT reset the strike count.
-    var builds = 0
-    def build() = { builds += 1; spark.range(100).toDF("id") }
-    val consumers = Set("q_mm_first", "q_mm_last")
-    Det.memoMulti(spark, "test.exhaust", consumers)(build()).count()
-    assert(builds == 1)
-    Det.releaseAfter(spark, "q_mm_first")
-    Det.memoMulti(spark, "test.exhaust", consumers)(build()).count()
-    assert(builds == 1, "memo must survive until the consumer set is exhausted")
-    Det.releaseAfter(spark, "q_mm_last")
-    Det.memoMulti(spark, "test.exhaust", consumers)(build()).count()
-    assert(builds == 2, "exhausted memo must rebuild fresh on later reuse")
     Det.releasePins(spark)
   }
 

@@ -14,19 +14,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val s = GraftSession.builder(4, "graft-tests")
       // Catalog tables (bucketed staging) land in a temp warehouse, not
       // a spark-warehouse dir inside the repo.
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .appName("graft-tests")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
