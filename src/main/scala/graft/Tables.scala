@@ -28,6 +28,16 @@ object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"${resolve(sfDir)}/$name.parquet")
 
+  /** A shared-SQL query (one text, run verbatim by Spark and the DuckDB
+    * oracle): register each listed table as a temp view of its parquet
+    * read, then run `sql`.
+    */
+  def viaSql(tables: Seq[String], sql: String): (SparkSession, String) => DataFrame =
+    (spark, dir) => {
+      tables.foreach(t => table(spark, dir, t).createOrReplaceTempView(t))
+      spark.sql(sql)
+    }
+
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = table(s, d, "customer")

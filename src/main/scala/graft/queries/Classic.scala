@@ -15,17 +15,6 @@ object Classic {
   import Tables._
   type Q = (SparkSession, String) => DataFrame
 
-  private def viaSql(tables: Seq[String], sql: String,
-                     stageFacts: Boolean = true): Q = (spark, dir) => {
-    // Fact tables resolve to the family's staged scans (Staged.scala):
-    // one decode+spread per family instead of a serial single-row-group
-    // scan per query per run. The SQL text (and so the DuckDB oracle) is
-    // untouched. stageFacts=false keeps the raw parquet views for the
-    // double-scan/selective-filter shapes (see Staged.registerSqlViews).
-    Staged.registerSqlViews(spark, dir, tables, stageFacts)
-    spark.sql(sql)
-  }
-
   /** Selective scan-aggregate (forecast-revenue shape): one tight filter,
     * one exact-decimal product sum — pushdown does all the work.
     */
@@ -160,10 +149,8 @@ object Classic {
       |ORDER BY s.s_suppkey""".stripMargin
 
   val queries: Map[String, Q] = Map(
-    "q_sql_top_supplier" -> viaSql(Seq("supplier", "lineitem"), topSupplierSql,
-      stageFacts = false),
-    "q_sql_revenue_forecast" -> viaSql(Seq("lineitem"), revenueForecastSql,
-      stageFacts = false),
+    "q_sql_top_supplier" -> viaSql(Seq("supplier", "lineitem"), topSupplierSql),
+    "q_sql_revenue_forecast" -> viaSql(Seq("lineitem"), revenueForecastSql),
     "q_sql_shipping_priority" -> viaSql(Seq("customer", "orders", "lineitem"), shippingPrioritySql),
     "q_sql_local_volume" -> viaSql(
       Seq("region", "nation", "customer", "orders", "lineitem", "supplier"), localVolumeSql),

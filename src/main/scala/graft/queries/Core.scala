@@ -18,21 +18,6 @@ object Core {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Staged fact scans shared by the three q_agg reports (Staged.scala):
-    * the consumed lineitem/orders columns are decoded once per family and
-    * spread to the session's parallelism, so each report's join+partial-
-    * aggregate stage runs wide instead of inside the fixture's single-
-    * row-group serial scan task.
-    */
-  private def aggLineitem(spark: SparkSession, dir: String): DataFrame =
-    Staged.scan(spark, dir, "lineitem", "core.aggli",
-      Seq("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
-        "l_extendedprice", "l_discount", "l_shipdate"), "l_orderkey")
-
-  private def aggOrders(spark: SparkSession, dir: String): DataFrame =
-    Staged.scan(spark, dir, "orders", "core.aggord",
-      Seq("o_orderkey", "o_custkey", "o_orderdate"), "o_orderkey")
-
   /** A1 — customer analytics (generate-asset.scala:57-84) translated to the
     * harness star schema: count / countDistinct / sum / min / max /
     * avg-over-expression / conditional weekend sums, plus derived metrics.
@@ -41,8 +26,8 @@ object Core {
     * linearly with lineitem.
     */
   val aggCustomer: Q = (spark, dir) => {
-    val l = aggLineitem(spark, dir)
-    val o = aggOrders(spark, dir)
+    val l = lineitem(spark, dir)
+    val o = orders(spark, dir)
     val c = customer(spark, dir)
     val joined = l
       .join(o, l("l_orderkey") === o("o_orderkey"))
@@ -92,7 +77,7 @@ object Core {
     * dependency keeps the shuffle keyed on p_partkey.
     */
   val aggProduct: Q = (spark, dir) => {
-    val l = aggLineitem(spark, dir)
+    val l = lineitem(spark, dir)
     val p = part(spark, dir)
     l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
       .withColumn("final_price", col("l_extendedprice") * (lit(1.0) - col("l_discount")))
@@ -135,8 +120,8 @@ object Core {
     * hazard), post-agg revenue_per_customer / items_per_line.
     */
   val aggTime: Q = (spark, dir) => {
-    val l = aggLineitem(spark, dir)
-    val o = aggOrders(spark, dir)
+    val l = lineitem(spark, dir)
+    val o = orders(spark, dir)
     l.join(o, l("l_orderkey") === o("o_orderkey"))
       .withColumn("final_price", col("l_extendedprice") * (lit(1.0) - col("l_discount")))
       .groupBy(
@@ -345,12 +330,7 @@ object Core {
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin
 
-  val sqlPricingSummary: Q = (spark, dir) => {
-    // Staged fact view shared with the rest of the q_sql family
-    // (Staged.scala); SQL text and oracle untouched.
-    Staged.registerSqlViews(spark, dir, Seq("lineitem"), stageFacts = true)
-    spark.sql(pricingSummarySql)
-  }
+  val sqlPricingSummary: Q = viaSql(Seq("lineitem"), pricingSummarySql)
 
   val queries: Map[String, Q] = Map(
     "q_sql_pricing_summary" -> sqlPricingSummary,

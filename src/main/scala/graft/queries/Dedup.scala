@@ -693,11 +693,11 @@ object Dedup {
       case _ => ()
     }
 
-  /** Staged edges per shuffle partition of the pointer-jumping rounds. */
+  /** Number of staged edges per pointer-jumping shuffle partition. */
   private val EdgesPerPartition = 65536L
 
-  /** Staged edges below which the one-task union-find labels the graph:
-    * a memory bound (see `connectedComponents`, "Sizing").
+  /** Number of staged edges below which the one-task union-find labels
+    * the graph: a memory bound (see `connectedComponents`, "Sizing").
     */
   private val MaxLocalEdges = 1L << 20
 

@@ -119,23 +119,12 @@ object Det {
   private[graft] def valueMemoCount(spark: org.apache.spark.sql.SparkSession): Int =
     valueRegistry.keys.count(_._1 eq spark)
 
-  def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    pin(df, cache = true)
-
-  /** `cache = false` registers the frame for the release lifecycle
-    * WITHOUT wrapping it in a columnar cache — for frames that are
-    * already materialized (a localCheckpoint row RDD): the
-    * InMemoryRelation scan pays a per-consumer columnar decode measured
-    * at ~10× the pruned parquet read it replaced (r16, q_sql staging),
-    * whereas the checkpoint blocks iterate as in-memory rows for free.
-    * unpersistDeep frees the wrapped LogicalRDD on release either way.
-    */
-  def pin(df: org.apache.spark.sql.DataFrame, cache: Boolean): org.apache.spark.sql.DataFrame = {
+  def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     sweepStopped()
     val buf = pinRegistry.getOrElseUpdate(df.sparkSession,
       scala.collection.mutable.ArrayBuffer.empty)
     buf.synchronized { buf += df }
-    if (cache) df.cache() else df
+    df.cache()
   }
 
   /** Memoized pin per (session, key): the first caller builds and pins,
@@ -143,19 +132,13 @@ object Det {
     * of a staged intermediate table at 100 TB. Assumes the underlying
     * source is immutable for the session: a rewrite of the parquet under
     * the same path would serve stale data until a release.
-    *
-    * `cache = false`: the built frame is registered for release but NOT
-    * wrapped in a columnar cache (see pin(df, cache)) — the build must
-    * return an already-materialized frame (localCheckpoint).
     */
-  def memo(spark: org.apache.spark.sql.SparkSession, key: String, cache: Boolean = true)
+  def memo(spark: org.apache.spark.sql.SparkSession, key: String)
           (build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     memoRegistry.get((spark, key)) match {
       case Some(df) => df
       case None =>
-        if (sys.env.contains("GRAFT_MEMO_TRACE"))
-          System.err.println(s"[Det] building memo $key")
-        val df = pin(build, cache)
+        val df = pin(build)
         memoRegistry.put((spark, key), df)
         df
     }

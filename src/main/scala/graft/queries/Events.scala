@@ -22,48 +22,6 @@ object Events {
   import Det._
   type Q = (SparkSession, String) => DataFrame
 
-  /** Family-staged events scan (r16, same discipline as Staged.scan):
-    * the fixture's single-row-group parquet makes every events read a
-    * serial ~250 ms decode+ts-convert task, and the seven family
-    * queries re-pay it up to three times per run (funnel's three
-    * stage filters). Decode+convert once per family, spread to the
-    * session's parallelism, materialize as a localCheckpoint row RDD
-    * (NOT a columnar cache — see Staged.scan's measured rationale).
-    *
-    * The fat `props` JSON string is EXCLUDED: a row-RDD scan has no
-    * column pruning, so the first form (all columns) taxed every
-    * consumer with ~200 B of payload per row — q_events_cohort warm
-    * went 0.32 → 0.68 s before the split. The one props consumer
-    * (q_events_json) stages its own narrow projection below. Measured
-    * per query (ONLY A/B, parquet → staged): only the MULTI-PASS
-    * consumers keep the staged scan — anomaly (stats + score passes,
-    * 0.36 → 0.29) and funnel (three stage filters, 0.34 → 0.33);
-    * tumbling/sliding/session/cohort read narrow column subsets once
-    * and the pruned parquet scan is cheaper (tumbling 0.21 → 0.30
-    * staged, REVERTED to parquet).
-    */
-  private def stagedEvents(spark: SparkSession, dir: String): DataFrame =
-    Det.memo(spark, s"events.staged:$dir", cache = false) {
-      val n = math.max(1, spark.sparkContext.defaultParallelism)
-      events(spark, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("ts"), col("value"))
-        .repartition(n, col("event_id")).localCheckpoint()
-    }
-
-  /** q_events_json's own staged projection — the parse input
-    * (event_type, value, props), spread so the per-row JSON extraction
-    * runs wide instead of inside the serial scan task (measured
-    * 0.46 → 0.26 s warm when the parse was staged+spread).
-    */
-  private def stagedEventsJson(spark: SparkSession, dir: String): DataFrame =
-    Det.memo(spark, s"events.stagedjson:$dir", cache = false) {
-      val n = math.max(1, spark.sparkContext.defaultParallelism)
-      events(spark, dir)
-        .select(col("event_type"), col("value"), col("props"))
-        .repartition(n, col("props")).localCheckpoint()
-    }
-
   /** Tumbling 1-hour windows × event_type: count, distinct users, exact
     * sums/avgs. Oracle: DuckDB time_bucket.
     */
@@ -167,7 +125,7 @@ object Events {
     * pattern for event payloads.
     */
   val eventsJson: Q = (spark, dir) =>
-    stagedEventsJson(spark, dir)
+    events(spark, dir)
       .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
       .withColumn("k_band", expr("k div 10").cast("long"))
       .groupBy(col("event_type"), col("k_band"))
@@ -200,7 +158,7 @@ object Events {
     * non-null user_id).
     */
   val eventsFunnel: Q = (spark, dir) => {
-    val ev = stagedEvents(spark, dir)
+    val ev = events(spark, dir)
     val su = ev.filter(col("event_type") === "signup")
       .groupBy(col("user_id")).agg(min(col("ts")).as("signup_ts"))
     val cl = ev.filter(col("event_type") === "click").as("e")
@@ -302,12 +260,12 @@ object Events {
     * broadcast of |types| rows; sqrt is IEEE-exact.
     */
   val eventsAnomaly: Q = (spark, dir) => {
-    val e = stagedEvents(spark, dir).select(col("event_id"), col("event_type"), col("value"))
-    // The per-type moments are memoized with a declared consumer (the
-    // sim.norm pattern): the stats frame is |types| rows but costs a
-    // full fact scan + shuffle to build, and the bench runs each query
-    // n times — without the memo run 1 pays a rebuild the warm runs
-    // don't (r6 VERDICT #7: run-1 was 2.2× run-3 from exactly this).
+    val e = events(spark, dir).select(col("event_id"), col("event_type"), col("value"))
+    // The per-type moments are memoized: the stats frame is |types| rows
+    // but costs a full fact scan + shuffle to build, and the bench runs
+    // each query n times — without the memo run 1 pays a rebuild the
+    // warm runs don't (r6 VERDICT #7: run-1 was 2.2× run-3 from exactly
+    // this).
     val st = Det.memo(spark, s"events.anomstats:$dir") {
       anomalyStats(e)
     }

@@ -19,14 +19,6 @@ object Subqueries {
   import Tables._
   type Q = (SparkSession, String) => DataFrame
 
-  private def viaSql(tables: Seq[String], sql: String,
-                     stageFacts: Boolean = true): Q = (spark, dir) => {
-    // Same staged fact views as Classic.viaSql — one family-shared
-    // decode+spread of lineitem/orders; SQL text and oracle untouched.
-    Staged.registerSqlViews(spark, dir, tables, stageFacts)
-    spark.sql(sql)
-  }
-
   /** Correlated EXISTS + NOT EXISTS: customers with ≥1 urgent order but
     * no F-status order.
     */
@@ -87,8 +79,7 @@ object Subqueries {
     "q_sql_exists" -> viaSql(Seq("customer", "orders"), existsSql),
     "q_sql_in_notin" -> viaSql(Seq("part", "lineitem", "orders"), inNotInSql),
     "q_sql_scalar_subquery" -> viaSql(Seq("orders"), scalarSubquerySql),
-    "q_sql_correlated_max" -> viaSql(Seq("orders"), correlatedMaxSql,
-      stageFacts = false) // double-scan of orders behind decorrelation: parquet wins
+    "q_sql_correlated_max" -> viaSql(Seq("orders"), correlatedMaxSql)
   )
 
   val oracles: Map[String, String] = Map(

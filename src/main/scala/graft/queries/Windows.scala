@@ -23,14 +23,6 @@ object Windows {
   import Det._
   type Q = (SparkSession, String) => DataFrame
 
-  // r16 note: staged fact scans (the q_agg/q_sql Staged.scan pattern)
-  // were TRIED for this family and REVERTED on measurement: the window
-  // reports do light per-row work after the scan, so the staged pass
-  // (~2 CPU-s per 600k-row row-RDD read) cost more than the pruned
-  // parquet scan it replaced (q_window_rank warm 0.34 -> 0.40/0.48 s,
-  // cpu 1.1 -> 11.7 with the build). Staging pays only when the
-  // downstream join/aggregate work dominates the scan.
-
   /** W1-W3 — revenue rank within category. The window orders by the
     * ROUNDED revenue (already engine-identical via Det), so ties resolve
     * identically in both engines (rank semantics). Output is total-ordered

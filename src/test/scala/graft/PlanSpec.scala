@@ -26,6 +26,18 @@ class PlanSpec extends SparkSpec {
     assert(scanCols <= 8, s"scan reads $scanCols of 11 lineitem columns:\n$plan")
   }
 
+  test("fact tables are read in place, not from a per-family copy") {
+    // Reading the columnar files directly keeps column pruning and filter
+    // pushdown; an in-memory row copy of a fact table (Scan ExistingRDD)
+    // has neither and is lost with its executor.
+    for (q <- Seq("q_agg_customer", "q_sql_big_orders", "q_sql_exists",
+                  "q_events_funnel", "q_events_json")) {
+      val plan = planOf(q)
+      assert(plan.contains("FileScan parquet"), s"$q reads no parquet:\n$plan")
+      assert(!plan.contains("Scan ExistingRDD"), s"$q reads a row copy:\n$plan")
+    }
+  }
+
   test("star-join dimensions broadcast") {
     val plan = planOf("q_sql_local_volume")
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast dims:\n$plan")
